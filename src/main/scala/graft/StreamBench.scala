@@ -26,9 +26,12 @@ import scala.collection.mutable.ArrayBuffer
   * row count per batch from StreamingQueryProgress. The artifact's
   * point is the SHAPE of the state curve: funnel state rows must
   * plateau at O(distinct users) while input rows keep growing —
-  * measured here, asserted in StreamStateBoundSpec. Output: one JSON
-  * line on stdout (same contract as graft.Bench) + a pretty copy at
-  * tools/stream_bench_last.json.
+  * measured here, asserted in StreamStateBoundSpec.
+  *
+  * Usage: runMain graft.StreamBench [sfDir] [outJson]
+  *
+  * Output: one JSON line on stdout (same contract as graft.Bench),
+  * also written to `outJson` (default target/stream_bench_last.json).
   */
 object StreamBench {
 
@@ -57,6 +60,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val outJson = args.lift(1).getOrElse("target/stream_bench_last.json")
     val spark = Sessions.local("graft-streambench")
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -176,9 +180,9 @@ object StreamBench {
     val line = js(Map("metric" -> "stream_bench", "sf_dir" -> sfDir,
       "unit" -> "sec") ++ results)
     println(line)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("tools/stream_bench_last.json"),
-      line.getBytes("UTF-8"))
+    val out = java.nio.file.Paths.get(outJson)
+    if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.write(out, line.getBytes("UTF-8"))
     spark.stop()
   }
 }

@@ -152,6 +152,26 @@ object PersistTableDual {
     }
   }
 
+  /** Where the non-scoped merge parks the old raw during its swap. */
+  private def rawBackup(rawPath: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(rawPath.toString + "__swap_backup")
+
+  /** Heal a non-scoped raw swap interrupted between "old raw renamed
+    * to backup" and "staged raw renamed in": a backup without a raw
+    * is restored; a backup beside a raw is the superseded copy of a
+    * finished swap and is dropped. Idempotent; a no-op without a
+    * backup. */
+  private def recoverRawSwap(fs: org.apache.hadoop.fs.FileSystem,
+                             rawPath: org.apache.hadoop.fs.Path): Unit = {
+    val backup = rawBackup(rawPath)
+    if (fs.exists(backup)) {
+      if (!fs.exists(rawPath)) {
+        if (!fs.rename(backup, rawPath))
+          throw new java.io.IOException(s"failed to restore raw from $backup")
+      } else fs.delete(backup, true)
+    }
+  }
+
   /** Marker recording which partitions' latest snapshots are owed a
     * recompute — written BEFORE the raw swap starts, deleted after
     * the latest swap completes. Any crash in between leaves raw and
@@ -255,6 +275,10 @@ object PersistTableDual {
     // scheme (s3a://, abfs://, ...)
     val rawPath = new org.apache.hadoop.fs.Path(paths.raw)
     val fs = rawPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // A crash mid raw swap (below) can leave the old raw only in its
+    // backup; put it back before asking whether raw exists, or the
+    // lake would be rebuilt from this delta alone.
+    recoverRawSwap(fs, rawPath)
     // Explicit existence check — a broad catch would misread a
     // transient read failure as "first run" and silently rebuild the
     // lake from just this delta.
@@ -277,6 +301,17 @@ object PersistTableDual {
       return persistScoped(spark, paths, deltaOnDisk, stamped.schema,
         keyCols, updatedAtCol, partitionCols, fs, rawPath)
 
+    // An empty delta on an existing lake changes nothing: keep raw's
+    // and latest's files (and schema) as they are, as persistScoped
+    // does, and report the lake's counts. The delta dir is written
+    // above either way. A latest without its commit marker (a crash
+    // mid-write) is rebuilt by the full path instead.
+    if (rawExists &&
+        fs.exists(new org.apache.hadoop.fs.Path(paths.latest, "_SUCCESS")) &&
+        deltaOnDisk.isEmpty)
+      return (spark.read.parquet(paths.raw).count(),
+        spark.read.parquet(paths.latest).count())
+
     val existingRaw =
       if (rawExists) {
         // partition-value type inference re-types hive partition
@@ -295,17 +330,22 @@ object PersistTableDual {
       struct(col("extracted_at"), col("run_id")))
 
     // Rewrite raw via a staging dir: the plan reads paths.raw lazily,
-    // so an in-place overwrite would clobber its own input. Hadoop
-    // FileSystem signals most failures via `false` returns — check
-    // them, or a failed delete turns the rename into a nested move
-    // and the next read silently sees doubled/stale data.
+    // so an in-place overwrite would clobber its own input. The old
+    // raw is RENAMED aside (not deleted) before the staged one moves
+    // in, so a crash between the two renames leaves it in the backup
+    // for [[recoverRawSwap]]. Hadoop FileSystem signals most failures
+    // via `false` returns — check them, or a failed rename turns the
+    // next one into a nested move and the next read silently sees
+    // doubled/stale data.
     val stage = paths.raw + "__stage"
     partitioned(deduped.write.mode("overwrite")).parquet(stage)
-    if (fs.exists(rawPath) && !fs.delete(rawPath, true))
-      throw new java.io.IOException(s"failed to delete old raw at $rawPath")
+    val backup = rawBackup(rawPath)
+    if (fs.exists(rawPath) && !fs.rename(rawPath, backup))
+      throw new java.io.IOException(s"failed to back up old raw at $rawPath")
     fs.mkdirs(rawPath.getParent)
     if (!fs.rename(new org.apache.hadoop.fs.Path(stage), rawPath))
       throw new java.io.IOException(s"failed to move staged raw into $rawPath")
+    fs.delete(backup, true)
 
     // same typed read here — an inferred re-read would feed
     // latestSnapshot re-typed partition values and write a corrupted

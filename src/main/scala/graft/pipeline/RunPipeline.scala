@@ -63,11 +63,52 @@ object RunPipeline {
   }
 
   /** What one full-lifecycle run did — counts per stage, for tests
-    * and operational logs. */
+    * and operational logs. `stageSeconds` holds each stage's own
+    * persist time, measured inside the stage: stages overlap, so the
+    * intervals between `stageHook` calls are not stage durations.
+    * Stages resumed from the ledger ran no persist and have no entry. */
   final case class FullRunReport(
       runId: String, resolvedSeeds: Long, universeSize: Long,
       persisted: Map[String, (Long, Long)], martRows: Long, digests: Long,
-      watermarkBefore: Long, watermarkAfter: Long)
+      watermarkBefore: Long, watermarkAfter: Long,
+      stageSeconds: Map[String, Double] = Map.empty)
+
+  /** Prefix of the names of [[runAll]]'s pool threads. */
+  private[pipeline] val PoolThreadPrefix = "graft-runfull-"
+
+  /** Runs `tasks` on a pool of `threads` daemon threads and returns
+    * their results in task order. Every task that started is waited
+    * for; once one throws, tasks not yet started are skipped, and the
+    * first error is rethrown after the wait. Every pool thread has
+    * exited by the time this returns or throws. */
+  private def runAll[A](threads: Int, tasks: Seq[() => A]): Seq[A] = {
+    val started = scala.collection.mutable.ArrayBuffer.empty[Thread]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+      (r: Runnable) => started.synchronized {
+        val t = new Thread(r, s"$PoolThreadPrefix${started.size}")
+        t.setDaemon(true)
+        started += t
+        t
+      })
+    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    try {
+      val futures = tasks.map(task => pool.submit(
+        new java.util.concurrent.Callable[Option[A]] {
+          def call(): Option[A] =
+            if (firstError.get != null) None
+            else try Some(task()) catch { case e: Throwable =>
+              firstError.compareAndSet(null, e)
+              None
+            }
+        }))
+      val results = futures.map(_.get())
+      Option(firstError.get).foreach(e => throw e)
+      results.flatten
+    } finally {
+      pool.shutdownNow()
+      started.synchronized(started.toList).foreach(_.join())
+    }
+  }
 
   /** The COMPLETE E1 lifecycle (run_ac_extraction.py:1537-1703),
     * composed from the already-proven parts:
@@ -103,6 +144,26 @@ object RunPipeline {
     * keyset pagination. Re-running with unchanged upstream is a
     * no-op on every master/raw (watermark + content-hash dedup — the
     * reference's two idempotence mechanisms, composed).
+    *
+    * Concurrency: the REST catalog stages (`acApiBase`) run one after
+    * another first. Then the 16 star-schema stages and the mart-and-
+    * digest block run together on a pool of
+    * `spark.sparkContext.defaultParallelism` daemon threads, so one
+    * stage's driver work (planning, file listing, commit, counts)
+    * overlaps other stages' tasks. Each stage depends only on the
+    * cached universe and writes only its own table's dirs. Retrying a
+    * failed run stays safe for the same two reasons as before: every
+    * stage's delta is preserved and ledgered, and the merge is
+    * idempotent.
+    *
+    * `stageHook(table)` fires once per completed persist stage, in
+    * completion order, after the stage's ledger entry is written.
+    * Ledger writes and hook calls share one lock, so the hook never
+    * runs on two threads at once and needs no synchronization of its
+    * own. A hook that throws fails the run: stages already started
+    * finish (and are ledgered), stages not yet started are skipped,
+    * and `runFull` rethrows the first error once every started stage
+    * has returned. No pool thread outlives the call.
     */
   def runFull(spark: SparkSession, outRoot: String, sfDir: String,
               totalRows: Long, nowUtc: String,
@@ -121,8 +182,6 @@ object RunPipeline {
     // SAME runId skips every already-persisted stage — its lazy delta
     // is never even planned, so no source scan / REST fetch happens
     val resumed = StageLedger.load(outRoot, runId)
-    // `stageHook` fires after each completed stage — the fault-
-    // injection seam RunPipelineSpec uses to kill a run mid-catalog
 
     // ── contacts collection (DSv2 paged source) ──
     val contacts = spark.read.format("graft.sources.PagedSource")
@@ -151,6 +210,8 @@ object RunPipeline {
       .dropDuplicates("id")
     val contactsDelta =
       sampleSize.fold(delta0)(n => delta0.orderBy("id").limit(n)).cache()
+    // set on a pool thread; runAll joins its threads before `finally`
+    // reads it
     var mart: org.apache.spark.sql.DataFrame = null
     var dealChildren: org.apache.spark.sql.DataFrame = null
     var eventsSlice: org.apache.spark.sql.DataFrame = null
@@ -170,16 +231,24 @@ object RunPipeline {
     // BY-NAME: a ledgered (resumed) stage returns its recorded counts
     // without constructing the plan at all — for fan-out endpoints
     // that means zero REST fetches, for star stages zero scans.
+    val hookLock = new Object
+    val stageSeconds = new java.util.concurrent.ConcurrentHashMap[String, Double]()
     def stage(table: String, delta: => org.apache.spark.sql.DataFrame,
               keys: Seq[String], updatedAt: String): (String, (Long, Long)) =
       resumed.get(table) match {
         case Some(counts) => table -> counts
         case None =>
+          val t0 = System.nanoTime()
           val counts = PersistTableDual.persist(spark,
             PersistTableDual.Paths(outRoot, table), delta, runId, nowUtc,
             keys, updatedAt)
-          StageLedger.markDone(outRoot, runId, table, counts)
-          stageHook(table)
+          stageSeconds.put(table, (System.nanoTime() - t0) / 1e9)
+          // the ledger file is rewritten whole, and callers' hooks
+          // append to unsynchronized state: one stage at a time
+          hookLock.synchronized {
+            StageLedger.markDone(outRoot, runId, table, counts)
+            stageHook(table)
+          }
           table -> counts
       }
 
@@ -217,7 +286,7 @@ object RunPipeline {
       .drop("o_orderkey", "o_custkey")
       .cache()
     dealChildren = dealLines
-    def childStage(table: String, flag: String) =
+    def childStage(table: String, flag: String) = () =>
       stage(table, dealLines.filter(col("l_returnflag") === flag),
         Seq("deal_id", "l_linenumber"), "l_shipdate")
 
@@ -226,7 +295,7 @@ object RunPipeline {
     // run_ac_extraction.py:1605-1664): same cached slice, one filter
     // + persist per type
     val activityTypes = Seq("click", "view", "signup", "purchase", "error")
-    val typedStages = activityTypes.map(tpe =>
+    val typedStages = activityTypes.map(tpe => () =>
       stage(s"activity_$tpe", events.filter(col("event_type") === tpe),
         Seq("event_id"), "ts"))
 
@@ -289,54 +358,65 @@ object RunPipeline {
         (dimStages ++ fanStages).toMap
     }
 
-    val persisted = acStages ++ (Map(
-      stage("contacts",
-        contactsDelta.withColumn("contact_id", col("id").cast("string")),
-        Seq("contact_id"), "updated_at"),
-      stage("activities", events, Seq("event_id"), "ts"),
-      stage("orders", orders, Seq("o_orderkey"), "o_orderdate"),
-      stage("orders_enriched", ordersEnriched, Seq("o_orderkey"), "o_orderdate"),
-      childStage("deal_notes", "R"),
-      childStage("deal_tasks", "A"),
-      childStage("deal_activities", "N"),
-      stage("contact_tags", contactTags, Seq("contact_id"), "last_seen"),
-      stage("contact_scores", contactScores, Seq("contact_id"), "scored_at"),
-      dimStage("dim_nation", nation, "n_nationkey"),
-      dimStage("dim_region", region, "r_regionkey"))
-      ++ typedStages)
-
     // 7. mart + digest (E3): flagship chatter master bounded to this
     // run's universe, written as the readable master file, plus the
     // per-contact digest in CSV and one-TXT-per-contact form (S9).
     // CACHED: the mart (the heaviest plan in the repo) feeds the CSV
     // write, the digest aggregation, and the display lookup — three
     // actions that would otherwise each recompute it from scratch.
-    mart = ChatterMaster.chatterMaster(spark, sfDir)
-      .join(universe, Seq("contact_id"), "left_semi").cache()
-    val martDir = s"$outRoot/master/mart"
-    mart.write.mode("overwrite").option("header", "true")
-      .csv(s"$martDir/chatter_master")
-    val martRows = mart.count()
+    // Returns (martRows, digests).
+    def martAndDigest(): (Long, Long) = {
+      mart = ChatterMaster.chatterMaster(spark, sfDir)
+        .join(universe, Seq("contact_id"), "left_semi").cache()
+      val martDir = s"$outRoot/master/mart"
+      mart.write.mode("overwrite").option("header", "true")
+        .csv(s"$martDir/chatter_master")
+      val martRows = mart.count()
 
-    val digestCore = mart.select(col("contact_id"),
-      struct(col("event_ts").as("ets"), xxhash64(col("event_id")).as("event_id"),
-        col("event_type"), col("chatter_line").as("line")).as("ev"))
-      .as[(Long, graft.ops.DigestEvent)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.ops.DigestAgg(5).toColumn)
-      .toDF("contact_id", "out")
-    val display = mart.select(col("contact_id"), col("contact_display")).distinct()
-    val digests = digestCore.join(broadcast(display), Seq("contact_id"))
-      .select(col("contact_id"),
-        concat(col("contact_display"), lit(" ["), col("out.types"),
-          lit("]\n"), col("out.tail")).as("digest"))
-    digests.write.mode("overwrite").option("header", "true")
-      .csv(s"$martDir/contact_digest")
-    ChatterMaster.writeDigestTxt(digests, s"$martDir/contact_digest_txt")
-    // multiLine: digest bodies embed newlines (CSV-quoted on write) —
-    // a plain line-splitting read would miscount records
-    val nDigests = spark.read.option("header", "true")
-      .option("multiLine", "true").csv(s"$martDir/contact_digest").count()
+      val digestCore = mart.select(col("contact_id"),
+        struct(col("event_ts").as("ets"), xxhash64(col("event_id")).as("event_id"),
+          col("event_type"), col("chatter_line").as("line")).as("ev"))
+        .as[(Long, graft.ops.DigestEvent)]
+        .groupByKey(_._1).mapValues(_._2)
+        .agg(new graft.ops.DigestAgg(5).toColumn)
+        .toDF("contact_id", "out")
+      val display = mart.select(col("contact_id"), col("contact_display")).distinct()
+      val digests = digestCore.join(broadcast(display), Seq("contact_id"))
+        .select(col("contact_id"),
+          concat(col("contact_display"), lit(" ["), col("out.types"),
+            lit("]\n"), col("out.tail")).as("digest"))
+      digests.write.mode("overwrite").option("header", "true")
+        .csv(s"$martDir/contact_digest")
+      ChatterMaster.writeDigestTxt(digests, s"$martDir/contact_digest_txt")
+      // multiLine: digest bodies embed newlines (CSV-quoted on write) —
+      // a plain line-splitting read would miscount records
+      val nDigests = spark.read.option("header", "true")
+        .option("multiLine", "true").csv(s"$martDir/contact_digest").count()
+      (martRows, nDigests)
+    }
+
+    val starStages: Seq[() => (String, (Long, Long))] = Seq(
+      () => stage("contacts",
+        contactsDelta.withColumn("contact_id", col("id").cast("string")),
+        Seq("contact_id"), "updated_at"),
+      () => stage("activities", events, Seq("event_id"), "ts"),
+      () => stage("orders", orders, Seq("o_orderkey"), "o_orderdate"),
+      () => stage("orders_enriched", ordersEnriched, Seq("o_orderkey"), "o_orderdate"),
+      childStage("deal_notes", "R"),
+      childStage("deal_tasks", "A"),
+      childStage("deal_activities", "N"),
+      () => stage("contact_tags", contactTags, Seq("contact_id"), "last_seen"),
+      () => stage("contact_scores", contactScores, Seq("contact_id"), "scored_at"),
+      () => dimStage("dim_nation", nation, "n_nationkey"),
+      () => dimStage("dim_region", region, "r_regionkey")) ++ typedStages
+    // the mart goes first: it is the longest task, so it starts on
+    // its own thread while the stages share the rest
+    type Result = Either[(Long, Long), (String, (Long, Long))]
+    val tasks: Seq[() => Result] =
+      (() => Left(martAndDigest())) +: starStages.map(s => () => Right(s()))
+    val results = runAll(spark.sparkContext.defaultParallelism, tasks)
+    val (martRows, nDigests) = results.collectFirst { case Left(m) => m }.get
+    val persisted = acStages ++ results.collect { case Right(s) => s }
 
     // 8. advance the watermark from the durably WRITTEN contacts
     // delta (never from a re-scan of the live source — upstream may
@@ -349,8 +429,10 @@ object RunPipeline {
     // in-flight runs, and a stale one must not shadow the next retry
     StageLedger.clear(outRoot)
 
+    import scala.jdk.CollectionConverters._
     FullRunReport(runId, nSeeds, universeSize, persisted, martRows, nDigests,
-      state.maxId, advanced.maxId)
+      state.maxId, advanced.maxId,
+      stageSeconds.asScala.toMap)
     } finally {
       // unpersist even on failure — a leaked cached mart (the
       // heaviest plan here) would pin executor memory for the

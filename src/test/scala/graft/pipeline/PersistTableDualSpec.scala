@@ -220,6 +220,61 @@ class PersistTableDualSpec extends AnyFunSuite {
     assert(e1 == "a2@x", "the new merge still lands")
   }
 
+  test("empty delta on an existing lake: lake counts, raw/latest files and schema untouched") {
+    val p = freshPaths()
+    persist(spark, p, delta(("1", "a@x", "2024-01-01"), ("2", "b@x", "2024-01-01")),
+      "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
+    // file name → mtime; a rewrite would also rename every part file
+    def files(dir: String): Map[String, Long] =
+      new java.io.File(dir).listFiles().map(f => f.getName -> f.lastModified).toMap
+    val (rawFiles, latestFiles) = (files(p.raw), files(p.latest))
+    val (rawSchema, latestSchema) =
+      (spark.read.parquet(p.raw).schema, spark.read.parquet(p.latest).schema)
+    Thread.sleep(20) // a rewrite now gets a later mtime
+
+    // zero rows carrying an extra column: nothing to merge, so the
+    // lake keeps its schema too
+    val empty = delta().withColumn("extra", org.apache.spark.sql.functions.lit("x"))
+    val counts = persist(spark, p, empty, "r2", "2026-01-02T00:00:00Z",
+      Seq("contact_id"), "updated_at")
+    assert(counts == ((2L, 2L)), "an empty delta reports the lake's counts")
+    assert(files(p.raw) == rawFiles, "raw files must be untouched")
+    assert(files(p.latest) == latestFiles, "latest files must be untouched")
+    assert(spark.read.parquet(p.raw).schema == rawSchema)
+    assert(spark.read.parquet(p.latest).schema == latestSchema)
+    assert(spark.read.parquet(p.delta("r2")).count() == 0,
+      "the empty delta dir is still written")
+  }
+
+  test("non-scoped raw swap heals a crash between backing up the old raw and moving in the new") {
+    import org.apache.spark.sql.functions.col
+    val d1 = delta(("1", "a@x", "2024-01-01"), ("2", "b@x", "2024-01-01"))
+    val d2 = delta(("1", "a2@x", "2024-02-01"), ("3", "c@x", "2024-02-01"))
+    def rawRows(p: Paths) = spark.read.parquet(p.raw).orderBy("contact_id", "updated_at")
+      .collect().toSeq
+    val uninterrupted = freshPaths()
+    persist(spark, uninterrupted, d1, "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
+    persist(spark, uninterrupted, d2, "r2", "2026-01-02T00:00:00Z", Seq("contact_id"), "updated_at")
+
+    // run r2 crashed after renaming the old raw aside and before the
+    // staged raw moved in: raw is missing, its history is in the backup
+    val p = freshPaths()
+    persist(spark, p, d1, "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
+    val rawDir = new java.io.File(p.raw)
+    val bak = new java.io.File(p.raw + "__swap_backup")
+    assert(rawDir.renameTo(bak), "test setup: move raw into its backup")
+
+    // the replayed r2 must restore the history before merging
+    val (raw2, latest2) = persist(spark, p, d2, "r2", "2026-01-02T00:00:00Z",
+      Seq("contact_id"), "updated_at")
+    assert((raw2, latest2) == ((4L, 3L)))
+    assert(rawRows(p) == rawRows(uninterrupted), "raw equals an uninterrupted run's")
+    assert(!bak.exists(), "the backup is dropped once raw is whole")
+    val e1 = spark.read.parquet(p.latest)
+      .filter(col("contact_id") === "1").select("email").as[String].head()
+    assert(e1 == "a2@x")
+  }
+
   test("delta dirs are preserved per run") {
     val p = freshPaths()
     persist(spark, p, delta(("1", "a@x", "2024-01-01")), "r1",

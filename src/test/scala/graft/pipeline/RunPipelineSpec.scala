@@ -228,4 +228,85 @@ class RunPipelineSpec extends AnyFunSuite {
       assert(r3.persisted("contact_notes") == ((20L, 20L)))
     } finally server.stop(0)
   }
+
+  private val concurrentNow = "2026-04-01T00:00:00Z"
+
+  private def poolThreads() = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(RunPipeline.PoolThreadPrefix))
+  }
+
+  /** Every master/latest table as sorted row strings. */
+  private def latestTables(root: String): Map[String, Seq[String]] =
+    new java.io.File(s"$root/master/latest").listFiles().filter(_.isDirectory)
+      .map(d => d.getName ->
+        spark.read.parquet(d.getPath).collect().map(_.toString).sorted.toSeq)
+      .toMap
+
+  /** An uninterrupted run on a fresh root whose hook records every
+    * call, the thread it ran on, and the most calls ever in flight. */
+  private lazy val uninterrupted = {
+    val root = Files.createTempDirectory("pipeline_concurrent").toString
+    FixtureBackend.reset()
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val report = RunPipeline.runFull(spark, root, SparkTesting.sf, totalRows = 300,
+      nowUtc = concurrentNow, stageHook = t => {
+        maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+        calls.add(t -> Thread.currentThread.getName)
+        Thread.sleep(20) // widens the window an overlapping call would hit
+        inFlight.decrementAndGet()
+      })
+    import scala.jdk.CollectionConverters._
+    (root, report, calls.asScala.toList, maxInFlight.get)
+  }
+
+  test("concurrent stages: the hook runs once per stage, one call at a time, " +
+      "and no pool thread outlives runFull") {
+    val (_, report, calls, maxInFlight) = uninterrupted
+    assert(calls.map(_._1).sorted == report.persisted.keys.toSeq.sorted,
+      "one hook call per persisted stage")
+    assert(maxInFlight == 1, "the hook must never run on two threads at once")
+    assert(calls.forall(_._2.startsWith(RunPipeline.PoolThreadPrefix)),
+      s"the star stages run on the pool: ${calls.map(_._2).distinct}")
+    assert(report.stageSeconds.keySet == report.persisted.keySet)
+    assert(report.stageSeconds.values.forall(_ > 0))
+    assert(poolThreads().isEmpty, s"pool threads alive after return: ${poolThreads()}")
+  }
+
+  test("concurrent stages: a failing hook rethrows after the started stages finish, " +
+      "and the retry equals an uninterrupted run") {
+    val (refRoot, ref, _, _) = uninterrupted
+    val root = Files.createTempDirectory("pipeline_concurrent_fail").toString
+    FixtureBackend.reset()
+    val hooked = scala.collection.mutable.ArrayBuffer.empty[String]
+    val boom = intercept[RuntimeException] {
+      RunPipeline.runFull(spark, root, SparkTesting.sf, totalRows = 300,
+        nowUtc = concurrentNow, stageHook = t => {
+          hooked += t
+          if (t == "orders") throw new RuntimeException(s"kill:$t")
+        })
+    }
+    assert(boom.getMessage == "kill:orders")
+    assert(poolThreads().isEmpty, s"pool threads alive after throw: ${poolThreads()}")
+    // every stage that finished is ledgered (the hook runs after the
+    // ledger write), and the run never advanced the watermark
+    assert(StageLedger.load(root, ref.runId).keySet == hooked.toSet)
+    assert(Watermark.load(s"$root/state.json").maxId == -1L)
+
+    // retry under the same nowUtc → same runId → ledgered stages skip
+    FixtureBackend.reset()
+    val r = RunPipeline.runFull(spark, root, SparkTesting.sf, totalRows = 300,
+      nowUtc = concurrentNow)
+    assert(r.runId == ref.runId)
+    assert(r.persisted == ref.persisted)
+    assert(r.stageSeconds.keySet == ref.persisted.keySet -- hooked,
+      "only the stages the failed run did not finish persist on retry")
+    assert((r.martRows, r.digests) == ((ref.martRows, ref.digests)))
+    assert(!new java.io.File(StageLedger.path(root)).exists())
+    assert(latestTables(root) == latestTables(refRoot),
+      "master/latest must equal an uninterrupted run's, row for row")
+  }
 }
