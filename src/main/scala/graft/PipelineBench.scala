@@ -50,6 +50,10 @@ object PipelineBench {
     val baseRows = args.lift(1).flatMap(_.toIntOption).getOrElse(12000)
     val outJson = args.lift(2).getOrElse("target/pipeline_bench_last.json")
     val deltaRows = baseRows / 20
+    // part B's id buckets: 64 ids, or the delta's size when that is
+    // smaller — the merge re-reads the touched buckets' prior rows, so
+    // a span wider than the delta would alone outgrow the 4x bound
+    val bucketSpan = math.max(1, math.min(64, deltaRows)).toLong
     val spark = Sessions.local("graft-pipelinebench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -104,7 +108,7 @@ object PipelineBench {
     }
     graft.pipeline.RunPipeline.runStreamingOnce(spark, sroot,
       Map("totalrows" -> baseRows.toString, "pagelimit" -> "500"),
-      "2026-08-01T00:00:00Z")
+      "2026-08-01T00:00:00Z", bucketSpan)
     val inv1 = files()
     val preBuckets = spark.read.parquet(rawDir)
       .groupBy("bucket").count()
@@ -113,7 +117,7 @@ object PipelineBench {
     graft.pipeline.RunPipeline.runStreamingOnce(spark, sroot,
       Map("totalrows" -> (baseRows + deltaRows).toString,
         "pagelimit" -> "500"),
-      "2026-08-02T00:00:00Z")
+      "2026-08-02T00:00:00Z", bucketSpan)
     val sec3 = (System.nanoTime() - t3) / 1e9
     val inv2 = files()
     // deltaRows new ids arrive via keyset resume
@@ -139,6 +143,7 @@ object PipelineBench {
     results += "scoped_merge" -> Map(
       "lake_rows_before" -> preBuckets.values.sum,
       "delta_rows" -> deltaRows,
+      "bucket_span" -> bucketSpan,
       "incr_wall_sec" -> sec3,
       "merge_input_rows" -> mergeInputRows,
       "merge_input_over_delta" -> mergeInputRows.toDouble / deltaRows,

@@ -10,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   * size this to executor cores × executors), and UTC session timezone
   * for oracle parity (graft.pipeline.Tables reinterprets the events
   * TIMESTAMP_NTZ column as UTC instants against it — the zone is
-  * correctness-bearing, not cosmetic).
+  * correctness-bearing, not cosmetic). `file:` resolves to
+  * [[graft.io.NioLocalFileSystem]] for the FileSystem and FileContext
+  * APIs alike: Hadoop's local filesystem forks a `chmod` per created
+  * file and a `readlink` per checkpoint rename where libhadoop is
+  * missing, and this one does neither.
   */
 object Sessions {
 
@@ -56,6 +60,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(graft.io.NioLocalFileSystem.sparkConf)
       .getOrCreate()
   }
 }

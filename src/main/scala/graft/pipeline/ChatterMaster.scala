@@ -215,12 +215,16 @@ object ChatterMaster {
       lit(null).cast("string").as("tag_name"))
   }
 
-  /** U2: the conformed all-sources union. */
-  def unifiedEvents(spark: SparkSession, sfDir: String): DataFrame =
+  /** U2: the conformed all-sources union. A `universe` (one
+    * `contact_id` column) keeps each source to those contacts before
+    * anything downstream sees a row. */
+  def unifiedEvents(spark: SparkSession, sfDir: String,
+                    universe: Option[DataFrame] = None): DataFrame =
     conformedUnion(Seq(
       conformEvents(spark, sfDir),
       conformOrders(spark, sfDir),
-      conformShipments(spark, sfDir)))
+      conformShipments(spark, sfDir)).map(src =>
+      universe.fold(src)(u => src.join(u, Seq("contact_id"), "left_semi"))))
 
   /** The full mart: unified events ⟕ contacts (J1, broadcast) with
     * name derivation (F1), chatter line (F2), the reference-width
@@ -231,10 +235,18 @@ object ChatterMaster {
     *
     * Every dim join here is broadcast — adding enrichment pairs adds
     * zero fact-side shuffles (the only wide stages remain the top-N
-    * window and the final sort; asserted in ScalePlanSpec). */
+    * window and the final sort; asserted in ScalePlanSpec).
+    *
+    * `universe` bounds the mart to a run's contacts (see
+    * [[unifiedEvents]]). The bound is applied to each source, below
+    * the top-N window: the window is partitioned by `contact_id` and
+    * every later join is a per-row lookup, so the rows kept are those
+    * a semi-join of the whole mart would keep, and the mart's cost
+    * follows the universe instead of the lake. */
   def chatterMaster(spark: SparkSession, sfDir: String,
-                    maxEventsPerContact: Int = 500): DataFrame = {
-    val unified = unifiedEvents(spark, sfDir)
+                    maxEventsPerContact: Int = 500,
+                    universe: Option[DataFrame] = None): DataFrame = {
+    val unified = unifiedEvents(spark, sfDir, universe)
     // one broadcast of the contacts dim carries names AND the nation
     // FK — a second customer join would broadcast the same table twice
     val contacts = t(spark, sfDir, "customer").select(

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Ops._
 
@@ -76,6 +76,15 @@ object PersistTableDual {
       .withColumn("extracted_at", lit(extractedAt))
 
   private val lineageCols = Seq("run_id", "extracted_at")
+
+  /** `df` with a row count observed by whichever action runs it: a
+    * write reports how many rows it wrote, without reading them back.
+    * `rows` blocks until that action has finished. */
+  private final class Counted(df: DataFrame) {
+    private val obs = new Observation()
+    val frame: DataFrame = df.observe(obs, count(lit(1)).as("rows"))
+    def rows: Long = obs.get("rows").asInstanceOf[Long]
+  }
 
   /** Relative hive partition dirs (e.g. "ym=2024-01", "a=1/b=2")
     * actually written under `root`, discovered by walking the layout
@@ -338,7 +347,8 @@ object PersistTableDual {
     // next one into a nested move and the next read silently sees
     // doubled/stale data.
     val stage = paths.raw + "__stage"
-    partitioned(deduped.write.mode("overwrite")).parquet(stage)
+    val rawRows = new Counted(deduped)
+    partitioned(rawRows.frame.write.mode("overwrite")).parquet(stage)
     val backup = rawBackup(rawPath)
     if (fs.exists(rawPath) && !fs.rename(rawPath, backup))
       throw new java.io.IOException(s"failed to back up old raw at $rawPath")
@@ -353,11 +363,13 @@ object PersistTableDual {
     // just-written layout, so no probe read is needed
     val raw = readRawTyped(spark, paths, stamped.schema, partitionCols,
       knownSchema = Some(deduped.schema))
-    val latest = latestSnapshot(raw, keyCols,
-      col(updatedAtCol), col("extracted_at"))
-    partitioned(latest.write.mode("overwrite")).parquet(paths.latest)
+    val latest = new Counted(latestSnapshot(raw, keyCols,
+      col(updatedAtCol), col("extracted_at")))
+    partitioned(latest.frame.write.mode("overwrite")).parquet(paths.latest)
 
-    (raw.count(), spark.read.parquet(paths.latest).count())
+    // raw holds exactly the staged rows, latest exactly the rows just
+    // written: the writes' own counts are the lake's
+    (rawRows.rows, latest.rows)
   }
 
   /** The partition-scoped rewrite: merge the delta with ONLY its own
@@ -405,7 +417,8 @@ object PersistTableDual {
     // stage → swap only the affected partition dirs (the write reads
     // raw lazily, so it must land in a staging dir first)
     val stage = new org.apache.hadoop.fs.Path(paths.raw + "__stage")
-    deduped.write.mode("overwrite").partitionBy(partitionCols: _*)
+    val rawRows = new Counted(deduped)
+    rawRows.frame.write.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(stage.toString)
     // record which latest partitions are owed a recompute BEFORE raw
     // mutates: a crash anywhere between here and the latest swap
@@ -421,16 +434,16 @@ object PersistTableDual {
     // a function of the business key — a key never spans partitions.
     val rawAffectedNew = readRawTyped(spark, paths, authoritative, partitionCols,
       knownSchema = Some(deduped.schema)).filter(pred)
-    val latestAffected = latestSnapshot(rawAffectedNew,
-      keyCols, col(updatedAtCol), col("extracted_at"))
+    val latestAffected = new Counted(latestSnapshot(rawAffectedNew,
+      keyCols, col(updatedAtCol), col("extracted_at")))
     val lstage = new org.apache.hadoop.fs.Path(paths.latest + "__stage")
-    latestAffected.write.mode("overwrite").partitionBy(partitionCols: _*)
+    latestAffected.frame.write.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(lstage.toString)
     swapPartitions(fs, lstage, latestPath, partitionCols.length)
     fs.delete(pendingLatestPath(paths), false) // latest is consistent again
 
-    (rawAffectedNew.count(),
-      spark.read.schema(rawAffectedNew.schema).parquet(paths.latest)
-        .filter(pred).count())
+    // the swaps replaced exactly the affected partitions with the two
+    // staged writes, so their counts are the affected partitions'
+    (rawRows.rows, latestAffected.rows)
   }
 }

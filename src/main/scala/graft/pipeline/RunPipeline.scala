@@ -366,8 +366,8 @@ object RunPipeline {
     // actions that would otherwise each recompute it from scratch.
     // Returns (martRows, digests).
     def martAndDigest(): (Long, Long) = {
-      mart = ChatterMaster.chatterMaster(spark, sfDir)
-        .join(universe, Seq("contact_id"), "left_semi").cache()
+      mart = ChatterMaster.chatterMaster(spark, sfDir, universe = Some(universe))
+        .cache()
       val martDir = s"$outRoot/master/mart"
       mart.write.mode("overwrite").option("header", "true")
         .csv(s"$martDir/chatter_master")

@@ -356,15 +356,21 @@ object DocStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bad = graft.text.NearDup
-          .shinglesN(batch, idCol, textCol, 4, distinct = false)
-          .join(broadcast(evalShingles.select("sh")), Seq("sh"))
-          .select(idCol).distinct()
-        val clean = batch.join(bad, Seq(idCol), "left_anti")
-          .withColumn("split", graft.text.Mixing.splitAssign("split1", col(idCol)))
-        graft.pipeline.PersistTableDual.persist(
-          batch.sparkSession, paths, clean, s"batch_$batchId",
-          extractedAt, Seq(idCol), tsCol)
+        // the batch is read twice below (shingled for the eval join,
+        // then anti-joined); without the cache each read re-runs the
+        // stateful dedup, loading and committing its state twice
+        batch.persist()
+        try {
+          val bad = graft.text.NearDup
+            .shinglesN(batch, idCol, textCol, 4, distinct = false)
+            .join(broadcast(evalShingles.select("sh")), Seq("sh"))
+            .select(idCol).distinct()
+          val clean = batch.join(bad, Seq(idCol), "left_anti")
+            .withColumn("split", graft.text.Mixing.splitAssign("split1", col(idCol)))
+          graft.pipeline.PersistTableDual.persist(
+            batch.sparkSession, paths, clean, s"batch_$batchId",
+            extractedAt, Seq(idCol), tsCol)
+        } finally batch.unpersist()
         ()
       }
   }

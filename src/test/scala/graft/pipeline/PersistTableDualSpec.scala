@@ -275,6 +275,49 @@ class PersistTableDualSpec extends AnyFunSuite {
     assert(e1 == "a2@x")
   }
 
+  test("returned (raw, latest) equal a fresh re-read: non-scoped, scoped, redelivered") {
+    import org.apache.spark.sql.functions.{col, when}
+    def reread(p: Paths) =
+      (spark.read.parquet(p.raw).count(), spark.read.parquet(p.latest).count())
+    val p = freshPaths()
+    val steps = Seq(
+      delta(("1", "a@x", "2024-01-01"), ("2", "b@x", "2024-01-01")),
+      delta(("1", "a2@x", "2024-02-01"), ("3", "c@x", "2024-02-01")),
+      // a content-duplicate redelivery: nothing new reaches raw
+      delta(("1", "a2@x", "2024-02-01"), ("3", "c@x", "2024-02-01")))
+    steps.zipWithIndex.foreach { case (d, i) =>
+      val counts = persist(spark, p, d, s"r$i", s"2026-01-0${i + 1}T00:00:00Z",
+        Seq("contact_id"), "updated_at")
+      assert(counts == reread(p), s"non-scoped step $i")
+    }
+    assert(reread(p) == ((4L, 3L)))
+
+    // scoped: the counts cover the delta's partitions only
+    val sp = freshPaths()
+    def bucketed(rows: (String, String, String)*) =
+      delta(rows: _*).withColumn("bucket",
+        when(col("contact_id") <= "2", "a").otherwise("b"))
+    def rereadBucket(b: String) = {
+      def n(dir: String) = spark.read.parquet(dir).filter(col("bucket") === b).count()
+      (n(sp.raw), n(sp.latest))
+    }
+    val scopedSteps = Seq(
+      bucketed(("1", "a@x", "2024-01-01"), ("3", "c@x", "2024-01-01")),
+      bucketed(("1", "a2@x", "2024-02-01"), ("2", "b@x", "2024-02-01")),
+      bucketed(("1", "a2@x", "2024-02-01"), ("2", "b@x", "2024-02-01")))
+    scopedSteps.zipWithIndex.foreach { case (d, i) =>
+      val counts = persist(spark, sp, d, s"r$i", s"2026-01-0${i + 1}T00:00:00Z",
+        Seq("contact_id"), "updated_at",
+        partitionCols = Seq("bucket"), partitionScoped = true)
+      val expected = if (i == 0) {
+        val (a, b) = (rereadBucket("a"), rereadBucket("b"))
+        (a._1 + b._1, a._2 + b._2)
+      } else rereadBucket("a")
+      assert(counts == expected, s"scoped step $i")
+    }
+    assert(rereadBucket("a") == ((3L, 2L)))
+  }
+
   test("delta dirs are preserved per run") {
     val p = freshPaths()
     persist(spark, p, delta(("1", "a@x", "2024-01-01")), "r1",

@@ -143,17 +143,24 @@ class DocStreamSpec extends AnyFunSuite {
       Seq((999L, cleanText)).toDF("doc_id", "text"), "doc_id", "text", 4)
       .select("sh")
     val input = MemoryStream[Doc]
-    def runOnce(): Unit = {
+    def runOnce(): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = DocStream.curatedIngestSink(input.toDF(), evalShingles,
         root, "docs", s"$root/ckpt", "ingest_ts", "10 minutes",
         extractedAt = "2026-01-01T00:00:00Z").start()
       try q.awaitTermination() finally if (q.isActive) q.stop()
+      q
     }
     input.addData(
       Doc(1, ts("2024-01-01 00:00:00"), cleanText2),
       Doc(2, ts("2024-01-01 00:01:00"), "tiny doc"), // gate reject
       Doc(3, ts("2024-01-01 00:02:00"), contaminated)) // decontam removal
-    runOnce()
+    val first = runOnce()
+    // the dedup state holds one fingerprint per distinct text seen: a
+    // micro-batch computed twice would report its rows twice
+    val stateRows = first.recentProgress.toSeq
+      .flatMap(p => Option(p.stateOperators).toSeq.flatten).map(_.numRowsTotal)
+    assert(stateRows.nonEmpty && stateRows.max == 3,
+      s"dedup state rows per batch: $stateRows, for 3 distinct docs")
     val latest = spark.read.parquet(s"$root/master/latest/docs")
     assert(latest.select("doc_id").as[Long].collect().toSet == Set(1L),
       "gate rejects and contaminated docs never reach the curated lake")
