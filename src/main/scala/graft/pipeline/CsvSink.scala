@@ -52,7 +52,7 @@ object CsvSink {
           try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
           finally in.close()
         } finally out.close()
-        // Backup-then-swap (same discipline as PersistTableDual):
+        // Backup-then-swap:
         // delete(src)+rename(tmp,src) would lose the part file's rows
         // if the process dies between the two. Rename the original
         // aside first so every intermediate state still holds the data

@@ -47,15 +47,9 @@ object DimCache {
       }
   }
 
-  private def saveMeta(dimsRoot: String, dim: String, now: Instant): Unit = {
-    val p = metaPath(dimsRoot, dim)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, s"""{"fetched_at_utc": "$now", "dim": "$dim"}""")
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def saveMeta(dimsRoot: String, dim: String, now: Instant): Unit =
+    AtomicFile.write(metaPath(dimsRoot, dim),
+      s"""{"fetched_at_utc": "$now", "dim": "$dim"}""")
 
   /** Serve the cached dim if present and younger than `ttlDays`,
     * else call `fetch`, persist its result, and serve that. Both

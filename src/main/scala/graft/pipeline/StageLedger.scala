@@ -68,19 +68,13 @@ object StageLedger {
   def markDone(outRoot: String, runId: String, stage: String,
                counts: (Long, Long)): Map[String, (Long, Long)] = {
     val done = load(outRoot, runId) + (stage -> counts)
-    val p = JPaths.get(path(outRoot))
-    if (p.getParent != null) Files.createDirectories(p.getParent)
     val root = mapper.createObjectNode()
     root.put("run_id", runId)
     val comp = root.putObject("completed")
     done.foreach { case (name, (a, b)) =>
       val arr = comp.putArray(name); arr.add(a); arr.add(b)
     }
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    AtomicFile.write(JPaths.get(path(outRoot)), mapper.writeValueAsString(root))
     done
   }
 

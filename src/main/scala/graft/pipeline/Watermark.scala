@@ -49,16 +49,10 @@ object Watermark {
     * leave a truncated (silently-regressed) state file. Serialized by
     * Jackson so a lastRunUtc containing quotes/backslashes round-trips. */
   def save(path: String, state: State): Unit = {
-    val p = JPaths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
     val root = mapper.createObjectNode()
     root.put("max_id", state.maxId)
     root.put("last_run_utc", state.lastRunUtc)
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    AtomicFile.write(JPaths.get(path), mapper.writeValueAsString(root))
   }
 
   /** S5: the incremental slice past the watermark. The comparison is

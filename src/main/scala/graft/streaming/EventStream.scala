@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** Structured Streaming surface (SURVEY.md §2.9): the reference's
   * cron-micro-batch semantics mapped onto real streaming operators.
@@ -27,7 +27,31 @@ final case class ContactEvent(contact_id: Long, event_id: Long,
 /** Keyed state: running count, latest event millis, last-k
   * (tsMillis, event_type) in chronological order. */
 final case class DigestState(count: Long, lastTsMillis: Option[Long],
-                             lastK: Vector[(Long, String)])
+                             lastK: Vector[(Long, String)]) {
+
+  /** This state advanced by one micro-batch's events for the contact,
+    * None when there are none. Batch order is not guaranteed: the
+    * increment is sorted (ts asc, event_id tiebreak) before it joins
+    * the running tail. */
+  def fold(events: Iterator[ContactEvent], k: Int): Option[DigestState] = {
+    val inc = events.toVector.sortBy(e => (e.event_ts.getTime, e.event_id))
+    if (inc.isEmpty) None
+    else Some(DigestState(
+      count + inc.size,
+      Some(math.max(lastTsMillis.getOrElse(Long.MinValue),
+        inc.map(_.event_ts.getTime).max)),
+      (lastK ++ inc.map(e => (e.event_ts.getTime, e.event_type)))
+        .sortBy(_._1).takeRight(k)))
+  }
+
+  def digest(contactId: Long): Option[ContactDigest] =
+    lastTsMillis.map(ts => ContactDigest(contactId, count, new Timestamp(ts),
+      lastK.map(_._2).mkString(", ")))
+}
+
+object DigestState {
+  val empty: DigestState = DigestState(0L, None, Vector.empty)
+}
 
 /** Funnel state: the resolved step times plus the bounded per-step
   * candidate retention that makes late arrival safe — min signup time
@@ -204,37 +228,30 @@ final class FunnelChangelogProcessor(deadlineMs: Long)
 final case class ContactDigest(contact_id: Long, n_events: Long,
                                last_event_ts: Timestamp, recent_types: String)
 
-/** The same per-contact digest as [[EventStream.contactDigestStream]]
-  * expressed in Spark 4's `transformWithState` arbitrary-state API:
-  * explicit named `ValueState` (RocksDB-backed, optionally TTL'd)
-  * instead of the classic GroupState. One processor instance per
-  * partition; state is keyed implicitly by the grouping key. */
-final class DigestProcessor(k: Int, ttl: TTLConfig = TTLConfig.NONE)
+/** Per-contact running digest as explicit keyed state in Spark 4's
+  * `transformWithState` arbitrary-state API: event count, latest
+  * event time, and the last `k` event types in chronological order —
+  * the streaming form of the reference's per-contact digest rollup
+  * (A9, run_ac_extraction.py:1436-1506), maintained incrementally
+  * instead of recomputed from the full raw table each run. One
+  * processor instance per partition; state is a named `ValueState`
+  * (RocksDB-backed), O(k) per contact and keyed implicitly by the
+  * grouping key. */
+final class DigestProcessor(k: Int)
     extends StatefulProcessor[Long, ContactEvent, ContactDigest] {
 
   @transient private var state: ValueState[DigestState] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState[DigestState](
-      "digest", Encoders.product[DigestState], ttl)
+      "digest", Encoders.product[DigestState], TTLConfig.NONE)
 
   override def handleInputRows(contactId: Long, rows: Iterator[ContactEvent],
                                timers: TimerValues): Iterator[ContactDigest] = {
-    val prev = if (state.exists()) state.get() else DigestState(0L, None, Vector.empty)
-    val inc = rows.toVector.sortBy(e => (e.event_ts.getTime, e.event_id))
-    if (inc.isEmpty) Iterator.empty
-    else {
-      val tail = (prev.lastK ++ inc.map(e => (e.event_ts.getTime, e.event_type)))
-        .sortBy(_._1).takeRight(k)
-      val next = DigestState(
-        prev.count + inc.size,
-        Some(math.max(prev.lastTsMillis.getOrElse(Long.MinValue),
-          inc.map(_.event_ts.getTime).max)),
-        tail)
-      state.update(next)
-      Iterator.single(ContactDigest(contactId, next.count,
-        new Timestamp(next.lastTsMillis.get),
-        next.lastK.map(_._2).mkString(", ")))
+    val prev = if (state.exists()) state.get() else DigestState.empty
+    prev.fold(rows, k) match {
+      case Some(next) => state.update(next); next.digest(contactId).iterator
+      case None => Iterator.empty
     }
   }
 }
@@ -281,27 +298,17 @@ final class SessionDigestProcessor(k: Int, gapMs: Long)
 
   override def handleInputRows(contactId: Long, rows: Iterator[ContactEvent],
                                timers: TimerValues): Iterator[ContactDigest] = {
-    val prev = if (state.exists()) state.get() else DigestState(0L, None, Vector.empty)
-    val inc = rows.toVector.sortBy(e => (e.event_ts.getTime, e.event_id))
-    if (inc.nonEmpty) {
-      val tail = (prev.lastK ++ inc.map(e => (e.event_ts.getTime, e.event_type)))
-        .sortBy(_._1).takeRight(k)
-      val lastTs = math.max(prev.lastTsMillis.getOrElse(Long.MinValue),
-        inc.map(_.event_ts.getTime).max)
-      state.update(DigestState(prev.count + inc.size, Some(lastTs), tail))
-      rearm(lastTs + gapMs)
+    val prev = if (state.exists()) state.get() else DigestState.empty
+    prev.fold(rows, k).foreach { next =>
+      state.update(next)
+      rearm(next.lastTsMillis.get + gapMs)
     }
     Iterator.empty // emissions happen only when the gap closes
   }
 
   override def handleExpiredTimer(contactId: Long, timers: TimerValues,
                                   expired: ExpiredTimerInfo): Iterator[ContactDigest] = {
-    val out =
-      if (state.exists()) {
-        val s = state.get()
-        s.lastTsMillis.map(ts => ContactDigest(contactId, s.count,
-          new Timestamp(ts), s.lastK.map(_._2).mkString(", ")))
-      } else None
+    val out = if (state.exists()) state.get().digest(contactId) else None
     state.clear() // session closed; the next event starts fresh
     out.iterator
   }
@@ -393,50 +400,6 @@ object EventStream {
   def dedupByIdWithWatermark(events: DataFrame, watermarkDelay: String): DataFrame =
     events.withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** Per-contact running digest as explicit keyed state
-    * (flatMapGroupsWithState): event count, latest event time, and the
-    * last `k` event types in chronological order — the streaming form
-    * of the reference's per-contact digest rollup (A9,
-    * run_ac_extraction.py:1436-1506), maintained incrementally instead
-    * of recomputed from the full raw table each run.
-    *
-    * Scale: state is O(k) per contact and partitioned by contact_id
-    * across executors. Pass an `idleTimeout` (e.g. "30 minutes") to
-    * evict contacts that stop producing events, bounding total state —
-    * note ProcessingTimeTimeout makes the engine schedule no-data
-    * batches to fire timeouts, so tests that drain with
-    * processAllAvailable use the default NoTimeout. */
-  def contactDigestStream(events: Dataset[ContactEvent], k: Int,
-                          idleTimeout: Option[String] = None): Dataset[ContactDigest] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.contact_id)
-      .flatMapGroupsWithState[DigestState, ContactDigest](
-        OutputMode.Update,
-        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout) {
-        (contactId: Long, batch: Iterator[ContactEvent], state: GroupState[DigestState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.getOrElse(DigestState(0L, None, Vector.empty))
-            // batch order is not guaranteed — sort the increment, then
-            // fold into the running tail (ts asc, event_id tiebreak)
-            val inc = batch.toVector.sortBy(e => (e.event_ts.getTime, e.event_id))
-            val tail = (prev.lastK ++ inc.map(e => (e.event_ts.getTime, e.event_type)))
-              .sortBy(_._1).takeRight(k)
-            val next = DigestState(
-              prev.count + inc.size,
-              Some(math.max(prev.lastTsMillis.getOrElse(Long.MinValue),
-                inc.map(_.event_ts.getTime).max)),
-              tail)
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator(ContactDigest(contactId, next.count,
-              new Timestamp(next.lastTsMillis.get),
-              next.lastK.map(_._2).mkString(", ")))
-          }
-      }
-  }
 
   /** [[DigestProcessor]] wired to a grouped stream — requires the
     * RocksDB state store provider

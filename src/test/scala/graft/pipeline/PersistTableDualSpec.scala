@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTesting
 import graft.pipeline.PersistTableDual.{Paths, persist}
@@ -17,6 +18,26 @@ class PersistTableDualSpec extends AnyFunSuite {
 
   private def delta(rows: (String, String, String)*) =
     rows.toDF("contact_id", "email", "updated_at")
+
+  private def copyDir(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val st = Files.walk(src)
+    try st.forEach { f =>
+      val dst = java.nio.file.Paths.get(to).resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(dst)
+      else Files.copy(f, dst)
+    } finally st.close()
+  }
+
+  private def deleteDir(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (Files.exists(root)) {
+      val st = Files.walk(root)
+      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => Files.delete(f))
+      finally st.close()
+    }
+  }
 
   test("idempotent merge: same delta twice → raw unchanged") {
     val p = freshPaths()
@@ -163,12 +184,15 @@ class PersistTableDualSpec extends AnyFunSuite {
       "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at",
       partitionCols = Seq("bucket"), partitionScoped = true)
 
-    // simulate a crash mid-swap: bucket a was renamed to the backup
-    // but its replacement never arrived — the partition is "missing"
+    // simulate a crash mid-move: the marker lists bucket a, the old
+    // bucket a was deleted and its staged copy never moved in — the
+    // partition is "missing" (the staged copy holds the same rows)
     val rawA = new java.io.File(s"${p.raw}/bucket=a")
-    val bak = new java.io.File(s"${p.raw}/__swap_backup/bucket=a")
+    val bak = new java.io.File(s"${p.raw}__stage/bucket=a")
     bak.getParentFile.mkdirs()
-    assert(rawA.renameTo(bak), "test setup: move partition into backup")
+    assert(rawA.renameTo(bak), "test setup: move partition into the stage")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(p.latest + "__pending"), "bucket=a")
     assert(!rawA.exists())
 
     // next scoped run (touching only bucket b) must first restore a
@@ -256,13 +280,17 @@ class PersistTableDualSpec extends AnyFunSuite {
     persist(spark, uninterrupted, d1, "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
     persist(spark, uninterrupted, d2, "r2", "2026-01-02T00:00:00Z", Seq("contact_id"), "updated_at")
 
-    // run r2 crashed after renaming the old raw aside and before the
-    // staged raw moved in: raw is missing, its history is in the backup
+    // run r2 crashed after committing its marker and deleting the old
+    // raw, before the staged raw moved in: raw is missing, its history
+    // is in the staged raw (an uninterrupted r2's raw)
     val p = freshPaths()
     persist(spark, p, d1, "r1", "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
     val rawDir = new java.io.File(p.raw)
-    val bak = new java.io.File(p.raw + "__swap_backup")
-    assert(rawDir.renameTo(bak), "test setup: move raw into its backup")
+    val bak = new java.io.File(p.raw + "__stage")
+    copyDir(uninterrupted.raw, bak.toString)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p.latest + "__pending"), ".")
+    deleteDir(rawDir.toString)
+    assert(!rawDir.exists(), "test setup: raw deleted, its staged copy pending")
 
     // the replayed r2 must restore the history before merging
     val (raw2, latest2) = persist(spark, p, d2, "r2", "2026-01-02T00:00:00Z",
@@ -327,5 +355,137 @@ class PersistTableDualSpec extends AnyFunSuite {
     assert(spark.read.parquet(p.delta("r1")).count() == 1)
     assert(spark.read.parquet(p.delta("r2")).count() == 1)
     assert(spark.read.parquet(p.raw).count() == 2)
+  }
+
+  test("a failure between the raw swap and the latest write leaves no stale latest") {
+    import org.apache.spark.sql.functions.col
+    val p = freshPaths()
+    persist(spark, p, delta(("1", "a@x", "2024-01-01")), "r1",
+      "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at")
+    // a bad updated_at column fails while latest is built, after raw
+    // already took the new row
+    intercept[org.apache.spark.sql.AnalysisException] {
+      persist(spark, p, delta(("1", "a2@x", "2024-02-01")), "r2",
+        "2026-01-02T00:00:00Z", Seq("contact_id"), "no_such_col")
+    }
+    val counts = persist(spark, p, delta(), "r3", "2026-01-03T00:00:00Z",
+      Seq("contact_id"), "updated_at")
+    assert(counts == ((2L, 1L)))
+    val latest = spark.read.parquet(p.latest)
+    val expected = graft.ops.Ops.latestSnapshot(spark.read.parquet(p.raw),
+      Seq("contact_id"), col("updated_at"), col("extracted_at"))
+    assert(latest.collect().toSet == expected.select(latest.columns.map(col): _*).collect().toSet,
+      "latest equals latest_per_key(raw)")
+    assert(latest.select("email").as[String].collect().toSeq == Seq("a2@x"))
+    assert(!new java.io.File(p.latest + "__pending").exists())
+  }
+
+  test("partitioned full rewrite: a key's latest row moves partition, the old latest partition goes") {
+    import org.apache.spark.sql.functions.{col, substring}
+    val p = freshPaths()
+    def byMonth(rows: (String, String, String)*) =
+      delta(rows: _*).withColumn("ym", substring(col("updated_at"), 1, 7))
+    persist(spark, p, byMonth(("1", "a@x", "2024-01-01")), "r1",
+      "2026-01-01T00:00:00Z", Seq("contact_id"), "updated_at", partitionCols = Seq("ym"))
+    val counts = persist(spark, p, byMonth(("1", "a2@x", "2024-02-01")), "r2",
+      "2026-01-02T00:00:00Z", Seq("contact_id"), "updated_at", partitionCols = Seq("ym"))
+    assert(counts == ((2L, 1L)))
+    def dirs(d: String) =
+      new java.io.File(d).listFiles().map(_.getName).filter(_.startsWith("ym=")).toSet
+    assert(dirs(p.raw) == Set("ym=2024-01", "ym=2024-02"), "raw keeps both months")
+    assert(dirs(p.latest) == Set("ym=2024-02"), "no latest partition without a latest row")
+    val latest = spark.read.parquet(p.latest)
+    assert(latest.filter(col("ym") === "2024-01").count() == 0)
+    assert(latest.select("email").as[String].collect().toSeq == Seq("a2@x"))
+  }
+
+  /** Every on-disk state a merge can stop in, for run r2 over a lake
+    * holding r1, each followed by a third persist with an empty and a
+    * non-empty delta. Each must end equal, row for row, to the
+    * uninterrupted runs': with r2 once its marker was written, without
+    * it before. `rels` are the scope r2's merge records (the table dir
+    * itself, ".", for a full rewrite). */
+  private def crashStateTable(layout: DataFrame => DataFrame,
+                              partitionCols: Seq[String], scoped: Boolean,
+                              rels: Seq[String]): Unit = {
+    def run(p: Paths, d: DataFrame, i: Int) =
+      persist(spark, p, layout(d), s"r$i", s"2026-01-0${i}T00:00:00Z",
+        Seq("contact_id"), "updated_at", partitionCols, scoped)
+    val d1 = delta(("1", "a@x", "2024-01-01"), ("2", "b@x", "2024-01-01"),
+      ("3", "c@x", "2024-01-01"))
+    val d2 = delta(("1", "a2@x", "2024-02-01"), ("3", "c2@x", "2024-02-01"),
+      ("4", "d@x", "2024-02-01"))
+    val nexts = Seq("empty" -> delta(),
+      "non-empty" -> delta(("2", "b2@x", "2024-03-01"), ("4", "d2@x", "2024-03-01")))
+    def lake(ds: (DataFrame, Int)*) = {
+      val p = freshPaths()
+      val counts = ds.map { case (d, i) => run(p, d, i) }
+      (p, counts.last)
+    }
+    val (afterR1, _) = lake(d1 -> 1)
+    val (afterR2, _) = lake(d1 -> 1, d2 -> 2)
+    def at(root: String, rel: String) = if (rel == ".") root else s"$root/$rel"
+    def stage(dir: String) = dir + "__stage"
+    def move(from: String, to: String): Unit = {
+      deleteDir(to)
+      Files.createDirectories(java.nio.file.Paths.get(to).getParent)
+      Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+    }
+    def stageRaw(p: Paths): Unit = {
+      copyDir(afterR2.delta("r2"), p.delta("r2"))
+      rels.foreach(r => copyDir(at(afterR2.raw, r), at(stage(p.raw), r)))
+    }
+    def mark(p: Paths): Unit = Files.writeString(
+      java.nio.file.Paths.get(p.latest + "__pending"), rels.mkString("\n"))
+    def rawDone(p: Paths): Unit = {
+      stageRaw(p); mark(p)
+      rels.foreach(r => move(at(stage(p.raw), r), at(p.raw, r)))
+      deleteDir(stage(p.raw))
+    }
+    val states: Seq[(String, Boolean, Paths => Unit)] = Seq(
+      ("stage written, no marker", false, p => stageRaw(p)),
+      ("marker written, nothing moved", true, p => { stageRaw(p); mark(p) }),
+      ("a rel deleted, its rename pending", true, { p =>
+        stageRaw(p); mark(p)
+        rels.init.foreach(r => move(at(stage(p.raw), r), at(p.raw, r)))
+        deleteDir(at(p.raw, rels.last))
+      }),
+      ("raw done, latest pending", true, p => rawDone(p)),
+      ("a latest rel deleted", true, { p =>
+        rawDone(p)
+        rels.foreach(r => copyDir(at(afterR2.latest, r), at(stage(p.latest), r)))
+        rels.init.foreach(r => move(at(stage(p.latest), r), at(p.latest, r)))
+        deleteDir(at(p.latest, rels.last))
+      }))
+    def rows(dir: String) =
+      spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    for ((next, d3) <- nexts; committed <- Seq(false, true)) {
+      val (expected, expectedCounts) =
+        if (committed) lake(d1 -> 1, d2 -> 2, d3 -> 3) else lake(d1 -> 1, d3 -> 3)
+      states.filter(_._2 == committed).foreach { case (state, _, setup) =>
+        withClue(s"[$state, $next next delta] ") {
+          val p = Paths(Files.createTempDirectory("ptd").toString, "contacts")
+          copyDir(afterR1.root, p.root)
+          setup(p)
+          val counts = run(p, d3, 3)
+          assert(counts == expectedCounts)
+          assert(rows(p.raw) == rows(expected.raw), "raw")
+          assert(rows(p.latest) == rows(expected.latest), "latest")
+          Seq(stage(p.raw), stage(p.latest), p.latest + "__pending").foreach { left =>
+            assert(!new java.io.File(left).exists(), s"$left left behind")
+          }
+        }
+      }
+    }
+  }
+
+  test("crash-state table, unpartitioned: every stopped merge ends as an uninterrupted one") {
+    crashStateTable(identity, Nil, scoped = false, Seq("."))
+  }
+
+  test("crash-state table, bucket-partitioned scoped merge: every stopped merge ends as an uninterrupted one") {
+    import org.apache.spark.sql.functions.{col, when}
+    crashStateTable(_.withColumn("bucket", when(col("contact_id") <= "2", "a").otherwise("b")),
+      Seq("bucket"), scoped = true, Seq("bucket=a", "bucket=b"))
   }
 }
