@@ -48,9 +48,9 @@ object Bench {
       ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // measured window ends when the action returns — the
-        // cache-release in withCacheRelease's finally is session
+        // snapshot release in withCacheRelease's finally is session
         // hygiene, not query work, and charging it to the query would
-        // bias exactly the persist()-heavy operators the budgets
+        // bias exactly the snapshot-heavy operators the budgets
         // (calibrated pre-release-path) watch most closely
         var tEnd = 0L
         val ok =
@@ -61,10 +61,10 @@ object Bench {
             // into one agg keeps the whole plan (and its exchanges) live
             // while still returning a single row to the driver.
             // QDef.withCacheRelease (the one execution path all harness
-            // mains share) drops the intermediates a few operators
-            // persist(), so later queries are timed from the same cold
-            // state as earlier ones — leaked cache memory was inflating
-            // whichever queries ran next.
+            // mains share) frees the snapshots a query took, so later
+            // queries are timed from the same cold state as earlier
+            // ones — leaked blocks were inflating whichever queries
+            // ran next.
             graft.queries.QDef.withCacheRelease(spark, fn(spark, sfDir)) { out =>
               out.select(org.apache.spark.sql.functions.xxhash64(
                   out.columns.map(org.apache.spark.sql.functions.col): _*).as("h"))

@@ -1,17 +1,11 @@
 package graft.ops
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 
 /** Aggregation buffer: the true group count plus at most `cap + 1`
   * collected values — enough to know the group overflowed without
@@ -44,19 +38,11 @@ case class CappedSortedIds(
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CappedIdsBuffer] with UnaryLike[Expression] {
+  extends BoundedSortedAggregate[CappedIdsBuffer] {
 
   require(cap >= 1, s"cap must be >= 1, got $cap")
 
   override def prettyName: String = "capped_sorted_ids"
-  override def dataType: DataType = ArrayType(child.dataType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    TypeUtils.checkForOrderingExpr(child.dataType, prettyName)
-
-  @transient private lazy val ordering: Ordering[Any] =
-    TypeUtils.getInterpretedOrdering(child.dataType)
 
   override def createAggregationBuffer(): CappedIdsBuffer =
     new CappedIdsBuffer(0L, mutable.ArrayBuffer.empty)
@@ -83,30 +69,10 @@ case class CappedSortedIds(
     if (b.n > cap) null
     else new GenericArrayData(b.items.sorted(ordering).toArray)
 
-  // storage format: one UnsafeRow of (count: long, items: array) —
-  // the same generic binary path Spark's own Collect aggregates use,
-  // so any orderable child type serializes without per-type code
-  @transient private lazy val proj =
-    UnsafeProjection.create(Array[DataType](LongType, dataType))
-
-  override def serialize(b: CappedIdsBuffer): Array[Byte] = {
-    val row = proj.apply(InternalRow(b.n, new GenericArrayData(b.items.toArray)))
-    val out = new ByteArrayOutputStream()
-    val dos = new DataOutputStream(out)
-    dos.writeInt(row.getSizeInBytes)
-    row.writeToStream(out, null)
-    dos.flush()
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): CappedIdsBuffer = {
-    val size = java.nio.ByteBuffer.wrap(bytes, 0, 4).getInt
-    val row = new UnsafeRow(2)
-    row.pointTo(bytes, java.nio.ByteBuffer.wrap(bytes).arrayOffset() +
-      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + 4, size)
-    val items = row.getArray(1).toObjectArray(child.dataType)
-    new CappedIdsBuffer(row.getLong(0), mutable.ArrayBuffer.from(items))
-  }
+  override protected def stored(b: CappedIdsBuffer): (Long, Array[Any]) =
+    (b.n, b.items.toArray)
+  override protected def restored(n: Long, items: Array[AnyRef]): CappedIdsBuffer =
+    new CappedIdsBuffer(n, mutable.ArrayBuffer.from[Any](items))
 
   override def withNewMutableAggBufferOffset(offset: Int): CappedSortedIds =
     copy(mutableAggBufferOffset = offset)

@@ -1,17 +1,11 @@
 package graft.ops
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 
 /** Bounded `slice(sort_array(collect_set(c)), 1, k)`: the group's `k`
   * SMALLEST distinct values, sorted ascending — computed with O(k)
@@ -39,19 +33,11 @@ case class SmallestKDistinct(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.TreeSet[Any]] with UnaryLike[Expression] {
+  extends BoundedSortedAggregate[mutable.TreeSet[Any]] {
 
   require(k >= 1, s"k must be >= 1, got $k")
 
   override def prettyName: String = "smallest_k_distinct"
-  override def dataType: DataType = ArrayType(child.dataType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    TypeUtils.checkForOrderingExpr(child.dataType, prettyName)
-
-  @transient private lazy val ordering: Ordering[Any] =
-    TypeUtils.getInterpretedOrdering(child.dataType)
 
   override def createAggregationBuffer(): mutable.TreeSet[Any] =
     mutable.TreeSet.empty[Any](ordering)
@@ -78,32 +64,10 @@ case class SmallestKDistinct(
   override def eval(b: mutable.TreeSet[Any]): Any =
     new GenericArrayData(b.toArray)
 
-  // storage format: one UnsafeRow holding the sorted items array —
-  // the same generic binary path Spark's own Collect aggregates use,
-  // so any orderable child type serializes without per-type code
-  @transient private lazy val proj =
-    UnsafeProjection.create(Array[DataType](dataType))
-
-  override def serialize(b: mutable.TreeSet[Any]): Array[Byte] = {
-    val row = proj.apply(InternalRow(new GenericArrayData(b.toArray)))
-    val out = new ByteArrayOutputStream()
-    val dos = new DataOutputStream(out)
-    dos.writeInt(row.getSizeInBytes)
-    row.writeToStream(out, null)
-    dos.flush()
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.TreeSet[Any] = {
-    val size = java.nio.ByteBuffer.wrap(bytes, 0, 4).getInt
-    val row = new UnsafeRow(1)
-    row.pointTo(bytes, java.nio.ByteBuffer.wrap(bytes).arrayOffset() +
-      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + 4, size)
-    val items = row.getArray(0).toObjectArray(child.dataType)
-    val b = mutable.TreeSet.empty[Any](ordering)
-    items.foreach(b += _)
-    b
-  }
+  override protected def stored(b: mutable.TreeSet[Any]): (Long, Array[Any]) =
+    (b.size.toLong, b.toArray)
+  override protected def restored(n: Long, items: Array[AnyRef]): mutable.TreeSet[Any] =
+    mutable.TreeSet.from[Any](items)(ordering)
 
   override def withNewMutableAggBufferOffset(offset: Int): SmallestKDistinct =
     copy(mutableAggBufferOffset = offset)

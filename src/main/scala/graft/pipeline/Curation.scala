@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.queries.QDef
 import graft.text.{Mixing, NearDup, TextAnalysis => TA}
 
 /** Corpus CURATION lifecycle — the training-data analog of
@@ -31,17 +32,14 @@ import graft.text.{Mixing, NearDup, TextAnalysis => TA}
   */
 object Curation {
 
-  /** Every intermediate stage, so callers can persist/audit each.
-    * Call [[Stages.unpersist]] when done — curate() caches the reps
-    * and clean boundaries, and leaked cache in a shared session can
-    * silently substitute into OTHER queries' plans (the cross-query
-    * interference the bench harness had to clear). */
+  /** Every intermediate stage, so callers can audit each. The
+    * quality, exact-dedup, reps and clean boundaries are [[QDef.snap]]
+    * snapshots: each materializes once on first use, and
+    * [[QDef.withCacheRelease]] frees them after the query's action
+    * (a stage read after that release fails). */
   final case class Stages(
       raw: DataFrame, quality: DataFrame, exactDeduped: DataFrame,
-      reps: DataFrame, clean: DataFrame, split: DataFrame) {
-    def unpersist(): Unit =
-      { exactDeduped.unpersist(); reps.unpersist(); clean.unpersist(); () }
-  }
+      reps: DataFrame, clean: DataFrame, split: DataFrame)
 
   /** Run the lifecycle. `edgePairs` turns the exact-deduped corpus
     * into near-dup candidate (doc_a, doc_b) pairs — exact Jaccard for
@@ -53,27 +51,19 @@ object Curation {
              edgePairs: DataFrame => DataFrame): Stages = {
     val cols = docs.columns.map(col)
 
-    // r18 OPT: snapshotted (lazy localCheckpoint — the 100 TB run
-    // writes this stage boundary to storage, scaladoc above). The
-    // verdict projection used to run THREE times per lifecycle: the
-    // exact-dedup aggregate's build side, the survivor join's probe
-    // side, and the audit's b_quality count. One snapshot, three
-    // block reads; blocks are freed with the other stage caches.
-    val quality = TA.withQualityVerdict(docs, "text")
-      .filter(col("keep") === 1).select(cols: _*)
-      .localCheckpoint(false)
+    // Every stage boundary below with several downstream readers is
+    // a snapshot (a 100 TB run writes stage boundaries to storage
+    // instead). The verdict projection would otherwise run three
+    // times: the exact-dedup aggregate's build side, the survivor
+    // join's probe side, and the audit's b_quality count.
+    val quality = QDef.snap(TA.withQualityVerdict(docs, "text")
+      .filter(col("keep") === 1).select(cols: _*))
 
     val keepIds = NearDup.exactDedup(quality, "doc_id", "text")
       .select(col("keep_id").as("doc_id"))
-    // persisted (r17 OPT): this boundary used to be re-derived three
-    // times — once for the audit's c-count and TWICE inside the reps
-    // plan (the edge generator and the survivor join both consume it,
-    // and each derivation pays the quality verdict twice: probe side
-    // + md5-agg build side). Like reps/clean below it is a stage
-    // boundary with multiple downstream readers, which is exactly the
-    // persist() case (guide §5); a 100 TB run writes stage boundaries
-    // to storage instead.
-    val exact = quality.join(keepIds, "doc_id").persist()
+    // read by the audit's c-count and twice inside the reps plan (the
+    // edge generator and the survivor join)
+    val exact = QDef.snap(quality.join(keepIds, "doc_id"))
 
     val cc = NearDup.connectedComponents(exact.select("doc_id"), "doc_id",
       edgePairs(exact))
@@ -82,9 +72,9 @@ object Curation {
       .withColumn("rn",
         row_number().over(byCluster.orderBy(col("n_chars").desc, col("doc_id"))))
       .filter(col("rn") === 1).select("doc_id")
-    // persisted: the audit + downstream stages re-read this boundary,
+    // the audit and the decontamination stage re-read this boundary,
     // and the CC iteration above must not re-run per consumer
-    val reps = exact.join(repIds, "doc_id").persist()
+    val reps = QDef.snap(exact.join(repIds, "doc_id"))
 
     val evSh = NearDup.shinglesN(evalDocs, "doc_id", "text", 4)
       .select("sh").distinct()
@@ -92,7 +82,7 @@ object Curation {
     val bad = NearDup.shinglesN(train, "doc_id", "text", 4, distinct = false)
       .join(broadcast(evSh), "sh")
       .select("doc_id").distinct()
-    val clean = train.join(bad, Seq("doc_id"), "left_anti").persist()
+    val clean = QDef.snap(train.join(bad, Seq("doc_id"), "left_anti"))
 
     val split = clean.withColumn("split",
       Mixing.splitAssign("split1", col("doc_id")))
@@ -103,9 +93,9 @@ object Curation {
   /** Per-stage row counts, one row per lifecycle stage (stage-letter
     * prefixes give the lifecycle order under a plain string sort).
     * EAGER by design: the counts are 8 scalars, so they are taken as
-    * actions and the stage caches released before returning — a lazy
-    * union of count-aggregates would pin the persisted boundaries
-    * for as long as the consumer holds the plan. */
+    * actions at build time and the returned frame holds no snapshot —
+    * a lazy union of count-aggregates would re-read the stage
+    * snapshots inside the consumer's action. */
   def audit(st: Stages): DataFrame = {
     val spark = st.raw.sparkSession
     import spark.implicits._
@@ -122,7 +112,6 @@ object Curation {
         case _       => "h_test"
       }) -> r.getLong(1)
     }.toSeq
-    st.unpersist()
     (base ++ splits).sortBy(_._1).toDF("stage", "n_docs")
   }
 }

@@ -926,8 +926,8 @@ object AnalyticsQueries {
     // (NearDup.orientByDegree has the proof; the triangle SET — and
     // hence every output row — is orientation-invariant, and both
     // engines run the same oriented plan). The oriented edge set is
-    // persisted — three scans of one materialization, not three runs
-    // of the whole Jaccard pipeline (released post-action by
+    // snapshotted — three scans of one materialization, not three runs
+    // of the whole Jaccard pipeline (freed post-action by
     // QDef.withCacheRelease). TriangleOrientationSpec pins the
     // star-graph fan-out bound mechanically.
     QDef("q_triangle_support", Some(s"""
@@ -971,8 +971,8 @@ object AnalyticsQueries {
     // pairwise evidence should NOT be transitively trusted — the
     // decision signal between "collapse the cluster" and "review the
     // chain". Reuses the SAME degeneracy-oriented triangle machinery
-    // and persisted edge list (triangleSupport persists `und`; the
-    // degree aggregate reads those cached blocks, so the Jaccard
+    // and snapshotted edge list (one snapshot of `und`; the degree
+    // aggregate reads those stored blocks, so the Jaccard
     // edge build still runs once); nodes with degree < 2 have no
     // defined LCC and are excluded, triangle-less nodes report 0.
     QDef("q_local_clustering", Some(s"""
@@ -1106,14 +1106,13 @@ object AnalyticsQueries {
             .groupBy("user_id").agg(min(col("ts")).as(outT))
         // the three counted branches are independent union subtrees,
         // and Catalyst does not share subplans across branches — so
-        // the tiny per-user step tables persist, or the s3 branch
-        // would re-run the s1 and s2 scans/aggregates (3 events
-        // scans instead of 1 at the 100 TB shape). Released after the
-        // action by QDef.withCacheRelease (all harness mains route
-        // through it) — never left in the shared session.
-        val s1 = ev.filter(col("event_type") === "signup")
-          .groupBy("user_id").agg(min(col("ts")).as("t1")).persist()
-        val s2 = step("view", s1, "t1", "t2").persist()
+        // the tiny per-user step tables are snapshotted, or the s3
+        // branch would re-run the s1 and s2 scans/aggregates (3
+        // events scans instead of 1 at the 100 TB shape).
+        // QDef.withCacheRelease frees the snapshots after the action.
+        val s1 = QDef.snap(ev.filter(col("event_type") === "signup")
+          .groupBy("user_id").agg(min(col("ts")).as("t1")))
+        val s2 = QDef.snap(step("view", s1, "t1", "t2"))
         val s3 = step("purchase", s2, "t2", "t3")
         def counted(df: org.apache.spark.sql.DataFrame, name: String) =
           df.agg(count(lit(1)).as("users")).select(lit(name).as("step"), col("users"))

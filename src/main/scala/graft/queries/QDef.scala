@@ -12,33 +12,21 @@ final case class QDef(
     fn: (SparkSession, String) => DataFrame)
 
 object QDef {
-  /** Run one query's action and release every cached plan afterwards.
+  /** Run one query's action, then free every in-query snapshot.
     *
-    * A few operators persist() bounded intermediates at plan-build
-    * time (q_triangle_support's oriented edge set, q_funnel_steps'
-    * per-user step tables) because their plans scan one
-    * materialization several times. Those persists are correct inside
-    * the query but leak into the SHARED session once the action
-    * finishes — and Spark substitutes cached plans into any later
-    * query with a matching subtree (the cross-query
-    * cache-substitution hazard Curation's scaladoc documents). Every
+    * A query holds an intermediate one way only: [[snap]], inside the
+    * query (MaterializationBanSpec keeps persist()/cache() off the
+    * query paths). Snapshot blocks persist the underlying RDD
+    * directly, outside the catalog cache, so nothing else frees them:
+    * a 423-query sweep would accumulate every query's snapshots until
+    * the ContextCleaner's GC-driven reclaim happens to run. Every
     * harness main (Bench, Verify, ExplainOne) routes its per-query
-    * action through here so release is centralized, not a per-caller
-    * workaround; library consumers executing `SparkEntry.queries`
-    * directly should do the same after each action. */
+    * action through here, and library consumers executing
+    * `SparkEntry.queries` directly should do the same after each
+    * action: once it returns, nothing re-executes the frame. */
   def withCacheRelease[T](spark: SparkSession, df: => DataFrame)(action: DataFrame => T): T =
-    try action(df) finally {
-      spark.catalog.clearCache()
-      // Snapshot blocks from snap()/localCheckpoint live OUTSIDE the
-      // catalog cache (they persist the underlying RDD directly), so
-      // clearCache() never frees them and a 423-query sweep would
-      // accumulate every query's snapshots until the ContextCleaner's
-      // GC-driven reclaim happens to run. Released here, centrally,
-      // for the same reason the persist() release is: the action is
-      // complete, nothing re-executes the returned frame.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    try action(df)
+    finally spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
 
   /** Lazy local-checkpoint SNAPSHOT of a deterministic intermediate:
     * materializes on first use and — unlike persist() — TRUNCATES the

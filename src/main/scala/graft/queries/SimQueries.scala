@@ -2106,19 +2106,14 @@ object SimQueries {
     // narrow per-row min + a TakeOrdered(1) — k linear passes, no
     // shuffle wider than the 1-row picks; the honest FPS cost is k·N
     // and that is exactly what the plan spends. The Spark side
-    // PERSISTS each round's min-dist table (d1, d2): every dᵏ is
+    // snapshots each round's min-dist table (d1, d2): every dᵏ is
     // read by three consumers (the next pick, the next dᵏ⁺¹, its cov
-    // aggregate), and without the persist the k-pass bound would
+    // aggregate), and without the snapshot the k-pass bound would
     // hinge on ReuseExchange deduping nested subtrees (dᵏ recomputes
     // dᵏ⁻¹ recursively — k² passes if the dedup misses). ~N rows ×
-    // (id, vec, dist) per round, MEMORY_AND_DISK, spill-safe. The
-    // caches are SCOPED, not leaked: the 3 summary rows (bounded by
-    // construction — one per round) are materialized eagerly inside
-    // the builder and both round tables unpersisted before the
-    // result returns, since QDef builders have no other lifecycle
-    // owner and ~2N cached (id, vec, dist) blocks would otherwise
-    // stay pinned for the whole Verify/Bench session
-    // (CoresetCacheSpec pins the net-zero persistent-RDD delta).
+    // (id, vec, dist) per round, freed by QDef.withCacheRelease after
+    // the action (CoresetCacheSpec pins the net-zero persistent-RDD
+    // delta).
     QDef("q_coreset_fps", Some(s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       c1 AS (SELECT vec_id AS id1, v AS v1 FROM e WHERE vec_id = 0),
@@ -2152,15 +2147,13 @@ object SimQueries {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val c1 = e.filter(col("vec_id") === 0)
           .select(col("vec_id").as("id1"), col("v").as("v1"))
-        val d1 = e.crossJoin(broadcast(c1))
-          .select(col("vec_id"), col("v"), dm(col("v"), col("v1")).as("dm"))
-          .persist()
+        val d1 = QDef.snap(e.crossJoin(broadcast(c1))
+          .select(col("vec_id"), col("v"), dm(col("v"), col("v1")).as("dm")))
         val c2 = d1.orderBy(col("dm").desc, col("vec_id")).limit(1)
           .select(col("vec_id").as("id2"), col("v").as("v2"), col("dm").as("pd2"))
-        val d2 = d1.crossJoin(broadcast(c2))
+        val d2 = QDef.snap(d1.crossJoin(broadcast(c2))
           .select(col("vec_id"), col("v"),
-            least(col("dm"), dm(col("v"), col("v2"))).as("dm"))
-          .persist()
+            least(col("dm"), dm(col("v"), col("v2"))).as("dm")))
         val c3 = d2.orderBy(col("dm").desc, col("vec_id")).limit(1)
           .select(col("vec_id").as("id3"), col("v").as("v3"), col("dm").as("pd3"))
         val d3 = d2.crossJoin(broadcast(c3))
@@ -2178,11 +2171,7 @@ object SimQueries {
         val r3 = c3.crossJoin(cov(d3)).select(lit(3L).as("sel_rank"),
           col("id3").as("sel_vec_id"), col("pd3").as("picked_dist_milli"),
           col("mx").as("cover_max_milli"), expr("div(sm, nn)").as("cover_mean_milli"))
-        val out = r1.union(r2).union(r3).orderBy("sel_rank")
-        val rows = out.collect() // bounded: exactly 3 rows by construction
-        d1.unpersist(blocking = false)
-        d2.unpersist(blocking = false)
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        r1.union(r2).union(r3).orderBy("sel_rank")
       }),
 
     // CLUSTER↔LABEL PURITY: assign every vector to its nearest

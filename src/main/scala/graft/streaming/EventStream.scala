@@ -1,6 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
@@ -31,16 +34,25 @@ final case class DigestState(count: Long, lastTsMillis: Option[Long],
 
   /** This state advanced by one micro-batch's events for the contact,
     * None when there are none. Batch order is not guaranteed: the
-    * increment is sorted (ts asc, event_id tiebreak) before it joins
-    * the running tail. */
+    * increment is ordered (ts asc, event_id tiebreak) before it joins
+    * the running tail. Only the increment's k greatest events by that
+    * order can reach the tail, so the fold holds O(k) events however
+    * large the increment is. */
   def fold(events: Iterator[ContactEvent], k: Int): Option[DigestState] = {
-    val inc = events.toVector.sortBy(e => (e.event_ts.getTime, e.event_id))
-    if (inc.isEmpty) None
-    else Some(DigestState(
-      count + inc.size,
-      Some(math.max(lastTsMillis.getOrElse(Long.MinValue),
-        inc.map(_.event_ts.getTime).max)),
-      (lastK ++ inc.map(e => (e.event_ts.getTime, e.event_type)))
+    // a min-heap of the k greatest (ts, event_id) seen so far
+    val top = mutable.PriorityQueue.empty[ContactEvent](
+      Ordering.by((e: ContactEvent) => (e.event_ts.getTime, e.event_id)).reverse)
+    var n = 0L
+    var maxTs = lastTsMillis.getOrElse(Long.MinValue)
+    events.foreach { e =>
+      n += 1
+      maxTs = math.max(maxTs, e.event_ts.getTime)
+      top.enqueue(e)
+      if (top.size > k) top.dequeue()
+    }
+    if (n == 0) None
+    else Some(DigestState(count + n, Some(maxTs),
+      (lastK ++ top.dequeueAll[ContactEvent].map(e => (e.event_ts.getTime, e.event_type)))
         .sortBy(_._1).takeRight(k)))
   }
 
@@ -438,22 +450,14 @@ object EventStream {
 
   /** Per-contact digest state folded from the batch lake — the
     * initial-state input for [[sessionDigestStream]] when a
-    * deployment switches from batch runs to the stream. One pass,
-    * O(k) memory per contact (bounded fold, not collect+sort). */
+    * deployment switches from batch runs to the stream. One pass of
+    * the stream's own [[DigestState.fold]], so the tail equals the one
+    * the stream builds from the same events; O(k) memory per contact. */
   def bootstrapDigestState(lake: Dataset[ContactEvent],
                            k: Int): Dataset[(Long, DigestState)] = {
     import lake.sparkSession.implicits._
     lake.groupByKey(_.contact_id).mapGroups { (cid, it) =>
-      var count = 0L
-      var lastTs = Long.MinValue
-      var tail = Vector.empty[(Long, String)]
-      it.foreach { e =>
-        count += 1
-        val t = e.event_ts.getTime
-        lastTs = math.max(lastTs, t)
-        tail = (tail :+ (t, e.event_type)).sortBy(_._1).takeRight(k)
-      }
-      (cid, DigestState(count, if (count == 0) None else Some(lastTs), tail))
+      (cid, DigestState.empty.fold(it, k).getOrElse(DigestState.empty))
     }
   }
 

@@ -627,9 +627,9 @@ object NearDup {
   }
 
   /** Per-node triangle membership counts over an undirected edge set
-    * (`doc_a < doc_b`): degeneracy-orient, persist the oriented edge
-    * list (three scans of one bounded materialization — callers must
-    * release via QDef.withCacheRelease or unpersist), then the
+    * (`doc_a < doc_b`): degeneracy-orient, snapshot the oriented edge
+    * list (three scans of one bounded materialization, freed by
+    * QDef.withCacheRelease after the caller's action), then the
     * standard e1(a→b)⋈e2(b→c)⋈e3(a→c) two-join. Each triangle
     * appears once (acyclic orientation), so per-node support is the
     * count of its appearances across the three corners. */
@@ -656,9 +656,8 @@ object NearDup {
     // executed q_triangle_support plan carried 426 parquet scans /
     // 9.6k formatted lines of AQE-replanned tree even though the
     // blocks were cached; the snapshot truncates lineage so the
-    // wedge join plans over stored blocks only. Blocks are released
-    // centrally by QDef.withCacheRelease (which now unpersists
-    // leaked RDD snapshots, not just catalog-cached plans).
+    // wedge join plans over stored blocks only. QDef.withCacheRelease
+    // frees the blocks after the action.
     val e = orientByDegree(u).localCheckpoint(false)
     val tri = e.select(col("src").as("a"), col("dst").as("b"))
       .join(e.select(col("src").as("b"), col("dst").as("c")), "b")
@@ -666,7 +665,7 @@ object NearDup {
     // One explode over the three corners, NOT three unionAll branches
     // of `tri`: each union branch re-executes the wedge join (the
     // expensive part — e⋈e enumerates every oriented two-path), and
-    // only the INPUT edge list is persisted. r13 profiling measured
+    // only the INPUT edge list is snapshotted. r13 profiling measured
     // the 3× re-join at ~2× the whole query's edge-build cost.
     tri.select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))

@@ -203,22 +203,24 @@ class ScalePlanSpec extends AnyFunSuite {
   }
 
   test("no registered query leaks cached relations past the execution path") {
-    // A few operators persist() bounded intermediates at plan-BUILD
-    // time (q_funnel_steps' step tables, q_triangle_support's edge
-    // set) — correct inside the query, but a leak into the shared
-    // session once the action finishes: Spark substitutes cached
-    // plans into any later query with a matching subtree. The QDef
-    // execution path (all harness mains route through it) must
-    // release them; this sweep proves no registered query escapes it.
+    // Queries snapshot intermediates inside the query (QDef.snap, at
+    // plan-BUILD time: q_funnel_steps' step tables, q_triangle_support's
+    // edge set), and QDef.withCacheRelease frees them once the action
+    // finishes (all harness mains route through it). This sweep proves
+    // no registered query leaves a catalog-cached relation (Spark
+    // substitutes those into any later query with a matching subtree)
+    // or a persisted RDD behind.
     spark.catalog.clearCache()
     val leakers = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       graft.queries.QDef.withCacheRelease(
         spark, SparkEntry.queries(name)(spark, SparkTesting.sf)) { df =>
-        df.queryExecution.executedPlan // plan only — persists happen at build
+        df.queryExecution.executedPlan // plan only — snapshots register at build
       }
-      !spark.sharedState.cacheManager.isEmpty
+      !spark.sharedState.cacheManager.isEmpty ||
+        (spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty
     }
-    assert(leakers.isEmpty, s"cached relations survive QDef execution in: $leakers")
+    assert(leakers.isEmpty, s"cached relations or RDDs survive QDef execution in: $leakers")
   }
 
   test("decontamination: the eval shingle set broadcasts — no train-side join shuffle") {

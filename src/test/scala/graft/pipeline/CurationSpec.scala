@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTesting
+import graft.queries.QDef
 import graft.text.{NearDup, TextAnalysis => TA}
 
 /** Lifecycle invariants for the composed curation pipeline that the
@@ -29,6 +30,11 @@ class CurationSpec extends AnyFunSuite {
     NearDup.lshCandidatePairs(NearDup.lshBands(sigs, "doc_id", 8, 2), "doc_id")
   }
 
+  /** Runs a test body through QDef.withCacheRelease, the one release
+    * point for the stages' snapshots. */
+  private def released[T](body: => T): T =
+    QDef.withCacheRelease(spark, spark.emptyDataFrame)(_ => body)
+
   private def curated(edge: DataFrame => DataFrame = exactEdges) =
     Curation.curate(
       docs.filter(col("doc_id") % 13 === 0),
@@ -36,8 +42,8 @@ class CurationSpec extends AnyFunSuite {
       edge)
 
   test("stage counts are monotone non-increasing through the lifecycle") {
-    val st = curated()
-    try {
+    released {
+      val st = curated()
       val counts = Seq(st.raw, st.quality, st.exactDeduped, st.reps, st.clean)
         .map(_.count())
       assert(counts.zip(counts.tail).forall { case (a, b) => a >= b },
@@ -45,27 +51,27 @@ class CurationSpec extends AnyFunSuite {
       assert(counts.last > 0, "the lifecycle must not empty the corpus")
       assert(st.split.count() == st.clean.count(),
         "split assignment is a projection, not a filter")
-    } finally st.unpersist()
+    }
   }
 
   test("curation is idempotent: re-curating the clean corpus changes nothing") {
-    val first = curated()
-    val again = Curation.curate(first.clean,
-      docs.filter(col("doc_id") % 50 === 0), exactEdges)
-    try {
+    released {
+      val first = curated()
+      val again = Curation.curate(first.clean,
+        docs.filter(col("doc_id") % 50 === 0), exactEdges)
       val n = first.clean.count()
       assert(again.quality.count() == n, "survivors still pass the quality gate")
       assert(again.exactDeduped.count() == n, "no exact dupes remain")
       assert(again.reps.count() == n,
         "cluster reps are pairwise non-near-dup, so they re-cluster as singletons")
       assert(again.clean.count() == n, "nothing left to decontaminate")
-    } finally { again.unpersist(); first.unpersist() }
+    }
   }
 
   test("the LSH scale path preserves the lifecycle's structural guarantees") {
-    val ex = curated()
-    val lsh = curated(lshEdges)
-    try {
+    released {
+      val ex = curated()
+      val lsh = curated(lshEdges)
       // identical up to the pair generator
       assert(lsh.exactDeduped.count() == ex.exactDeduped.count())
       // NOT asserted: reps(lsh) <= reps(exact). Banding is
@@ -84,6 +90,6 @@ class CurationSpec extends AnyFunSuite {
         .join(ex.split.select(col("doc_id"), col("split").as("s2")), "doc_id")
         .filter(col("s1") =!= col("s2")).count()
       assert(disagree == 0)
-    } finally { lsh.unpersist(); ex.unpersist() }
+    }
   }
 }

@@ -2,21 +2,22 @@ package graft.sim
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SparkTesting}
+import graft.queries.QDef
 
-/** Pins q_coreset_fps's cache lifecycle (r16 ADVICE): the builder
-  * persists its two round tables (d1, d2) so the k-pass FPS bound is
-  * a fact rather than an exchange-reuse hope, but QDef builders have
-  * no lifecycle owner — so the builder must also UNPERSIST them
-  * before returning, or ~2N cached (id, vec, dist) blocks pin
-  * storage memory for the whole Verify/Bench session. */
+/** Pins q_coreset_fps's snapshot lifecycle: the builder snapshots its
+  * two round tables (d1, d2) so the k-pass FPS bound is a fact rather
+  * than an exchange-reuse hope, and QDef.withCacheRelease, the one
+  * release point, frees them after the action — otherwise ~2N
+  * (id, vec, dist) blocks pin storage memory for the whole
+  * Verify/Bench session. */
 class CoresetCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTesting.spark
 
   test("q_coreset_fps leaves no persistent RDDs behind and still " +
       "returns the 3 materialized summary rows") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = SparkEntry.queries("q_coreset_fps")(spark, SparkTesting.sf)
-    val rows = df.collect()
+    val rows = QDef.withCacheRelease(spark,
+      SparkEntry.queries("q_coreset_fps")(spark, SparkTesting.sf))(_.collect())
     assert(rows.length === 3, s"expected 3 FPS rounds, got ${rows.length}")
     assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
     // picks are distinct vectors and round-1 distance is 0 by seeding
@@ -28,6 +29,6 @@ class CoresetCacheSpec extends AnyFunSuite {
       s"cover_max must shrink with more centers: ${covMax.toSeq}")
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
-      s"builder leaked cached RDDs: ids ${(after -- before).toSeq.sorted}")
+      s"query leaked cached RDDs: ids ${(after -- before).toSeq.sorted}")
   }
 }

@@ -484,6 +484,39 @@ class EventStreamSpec extends AnyFunSuite {
     }
   }
 
+  test("bootstrapped digest state equals the stream's digest on tied timestamps") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      // two events at the same ts, arriving in reverse event_id order;
+      // with k = 1 only the (ts, event_id)-greatest survives the tail
+      val events = Seq(
+        ContactEvent(1, 2, ts("2024-01-01 00:00:00"), "view"),
+        ContactEvent(1, 1, ts("2024-01-01 00:00:00"), "signup"))
+      val input = MemoryStream[ContactEvent]
+      val q = EventStream.contactDigestTransformWithState(input.toDS(), k = 1)
+        .writeStream.format("memory").queryName("tied_digests")
+        .outputMode(OutputMode.Update).start()
+      try {
+        input.addData(events: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.sql("SELECT * FROM tied_digests").as[ContactDigest].collect().toSeq
+      val boot = EventStream.bootstrapDigestState(events.toDS(), k = 1).collect().toSeq
+      assert(streamed.map(_.recent_types) == Seq("view"), s"stream digest: $streamed")
+      assert(boot.map { case (cid, st) => st.digest(cid) } == streamed.map(Some(_)),
+        s"bootstrapped $boot vs streamed $streamed")
+    } finally {
+      prevProvider match {
+        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+  }
+
   test("streaming persist-dual: micro-batches merge idempotently into raw/latest") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

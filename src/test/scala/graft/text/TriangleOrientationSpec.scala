@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTesting
+import graft.queries.QDef
 
 /** Degeneracy (low-degree-first) orientation for triangle counting
   * (VERDICT r10 "What's wrong" #2): the mechanical check that a
@@ -50,15 +51,14 @@ class TriangleOrientationSpec extends AnyFunSuite {
       a <- 200L to 203L; b <- 200L to 203L if a < b
     } yield (a, b)
     val und = (star ++ k4).toDF("doc_a", "doc_b")
-    try {
-      val got = NearDup.triangleSupport(und)
-        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
+    QDef.withCacheRelease(spark, NearDup.triangleSupport(und)) { tri =>
+      val got = tri.orderBy("doc_id").as[(Long, Long)].collect().toSeq
       val ref = idOrientedCounts(und)
         .orderBy("doc_id").as[(Long, Long)].collect().toSeq
       assert(got == ref, "degeneracy orientation must not change counts")
       assert(got == Seq((0L, 1L), (1L, 1L), (2L, 1L),
         (200L, 3L), (201L, 3L), (202L, 3L), (203L, 3L)))
-    } finally spark.catalog.clearCache()
+    }
   }
 
   test("deep chain: no triangles, orientation total over ties") {
@@ -66,9 +66,9 @@ class TriangleOrientationSpec extends AnyFunSuite {
     // tie-break must stay a total order so each edge appears exactly
     // once in the oriented set
     val und = (1L until 50L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    try {
-      assert(NearDup.orientByDegree(und).count() == 49L)
-      assert(NearDup.triangleSupport(und).count() == 0L)
-    } finally spark.catalog.clearCache()
+    assert(NearDup.orientByDegree(und).count() == 49L)
+    QDef.withCacheRelease(spark, NearDup.triangleSupport(und)) { tri =>
+      assert(tri.count() == 0L)
+    }
   }
 }
